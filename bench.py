@@ -278,7 +278,7 @@ def _env_probe() -> dict:
     environmental until re-run on an idle box."""
     samples = sorted(_calib_spin_once() for _ in range(3))
     solo = samples[1]
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spins = 3
     eff: float | None = None
     par_wall: float | None = None
@@ -345,7 +345,7 @@ def _wait_for_idle(threshold: float, timeout_sec: float) -> dict:
     # timeout is deliberately short (the gate runs before EVERY suite
     # pass, and a chronically oversubscribed box -- the r13 state --
     # should cost minutes, not the driver's whole bench budget).
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     frac = float(os.environ.get("SPARK_GRAFT_MIN_EFF_FRAC", "0.55"))
     ec_timeout = float(os.environ.get("SPARK_GRAFT_EFF_TIMEOUT", "120"))
     if frac > 0:

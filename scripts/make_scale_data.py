@@ -28,6 +28,8 @@ import os
 import sys
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
 DOC_K_CAP = 20  # doc ids must stay below dedup's DUP_SHIFT (100000)
@@ -57,15 +59,23 @@ def main() -> None:
         print(f"{name}: {n} rows")
 
     n_users = con.execute("SELECT max(user_id) + 1 FROM events").fetchone()[0]
-    # ts as BIGINT nanos: the fixture parquet is TIMESTAMP(NANOS), which the
-    # engine reads via nanosAsLong as BIGINT -- writing nanos keeps sf1 on
-    # the same code path (DuckDB would otherwise write micros TIMESTAMP_NTZ)
-    write("events", f"""
+    # ts as parquet TIMESTAMP(NANOS), like perfbench/inputs.py: the engine
+    # reads it via nanosAsLong as BIGINT nanos, and the DuckDB oracle
+    # prelude's epoch_ms(ts) binds it (a BIGINT column would not).  DuckDB
+    # writes its TIMESTAMP_NS as micros, so pyarrow writes this table.
+    reader = con.execute(f"""
         SELECT event_id + k * 100000 AS event_id,
-               epoch_ns(ts + to_hours(CAST(k AS BIGINT))) AS ts,
+               ts + to_hours(CAST(k AS BIGINT)) AS ts,
                user_id + k * {n_users} AS user_id,
                event_type, value, props
-        FROM events CROSS JOIN ks""")
+        FROM events CROSS JOIN ks""").fetch_record_batch()
+    schema = reader.schema.set(
+        reader.schema.get_field_index("ts"), pa.field("ts", pa.timestamp("ns"))
+    )
+    with pq.ParquetWriter(f"{out}/events.parquet", schema, version="2.6") as w:
+        for batch in reader:
+            w.write_table(pa.Table.from_batches([batch]).cast(schema))
+    print(f"events: {pq.ParquetFile(f'{out}/events.parquet').metadata.num_rows} rows")
 
     write("documents", """
         SELECT doc_id + k * 5000 AS doc_id,

@@ -20,6 +20,20 @@ STATE_NAMES = {
 }  # common/StreamingState.scala:21-29
 
 
+def classify_state(batch_running_ms: int, critical_ms: int, sla_ms: int) -> int:
+    """A10 for one analyzed batch, in plain Python: the ``state_id`` that
+    ``classify`` computes, with the same double comparisons (the int
+    operands are promoted to double, as Spark promotes them)."""
+    brt, ct = float(batch_running_ms), float(critical_ms)
+    if brt <= sla_ms * LAGGING:
+        return 1
+    if brt <= sla_ms * OKAY:
+        return 2
+    if ct <= sla_ms * CRITICAL:
+        return 3
+    return 4
+
+
 def resolve_sla(progress: DataFrame, sla_config: DataFrame, default_ms: int = DEFAULT_SLA_MS) -> DataFrame:
     """A23 -- per-query SLA: override map keyed by ``name ?? queryId``,
     falling back to the global default

@@ -6,20 +6,60 @@ from the job's MAX stage id, walk the stage DAG rootward; each stage
 contributes its max single-task duration; a stage's critical time is its own
 weight plus the max over its parents; missing parents contribute 0.
 
-Spark mapping: a bounded iterative loop of self-joins (DAG depth is small --
-single-digit for real Spark jobs), each iteration a hash join partitioned by
-stage_id.  No driver-side data; scales to arbitrarily many jobs since the
-loop length depends only on DAG *depth*, not job count.
+``job_critical_ms`` is that walk for one job in plain Python; the default
+Spark mapping runs it in an Arrow-batched pandas UDF over each job's
+collected DAG, and the live tick calls it on the driver.  The ``joins``
+mapping is a bounded iterative loop of self-joins (DAG depth is small --
+single-digit for real Spark jobs), each iteration a hash join partitioned
+by stage_id; its loop length depends only on DAG *depth*, not job count.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from functools import reduce
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def job_critical_ms(stages: Iterable, task_durations: Iterable) -> int:
+    """A8 for ONE job, in plain Python: ``stages`` yields the job's
+    ``(stage_id, parent_ids)`` pairs and ``task_durations`` its tasks'
+    ``(stage_id, duration_ms)`` pairs.  A stage weighs its max task
+    duration (NULL durations skipped); the walk starts at the max stage id
+    and adds the max over parents, a missing parent weighing 0 with no
+    parents (sparklens ``JobTimeSpan.criticalTime``).  The pandas UDF
+    below and the driver-side ``rows.results_rows`` both call this."""
+    nodes: dict[int, list[int]] = {}
+    for sid, parents in stages:
+        nodes[int(sid)] = [] if parents is None else [int(p) for p in parents]
+    weights: dict[int, int] = {}
+    for sid, d in task_durations:
+        if d is not None:  # running max = stage weight
+            sid, d = int(sid), int(d)
+            if d > weights.get(sid, -1):
+                weights[sid] = d
+    memo: dict[int, int] = {}
+
+    def crit(sid: int) -> int:
+        # sparklens JobTimeSpan.criticalTime: missing stage -> (0, [])
+        if sid in memo:
+            return memo[sid]
+        if sid in nodes:
+            w, parents = weights.get(sid, 0), nodes[sid]
+        else:
+            w, parents = 0, []
+        v = w + (max((crit(p) for p in parents), default=0) if parents else 0)
+        memo[sid] = v
+        return v
+
+    # A job with task rows but no stage rows (possible when tasks carry
+    # their own job_id) has an empty DAG: critical time 0 rather than max()
+    # raising on an empty dict.
+    return crit(max(nodes)) if nodes else 0
 
 
 def stage_weights(stages: DataFrame, tasks: DataFrame) -> DataFrame:
@@ -65,42 +105,18 @@ def _critical_path_pandas(stages: DataFrame, tasks: DataFrame) -> DataFrame:
 
     @pandas_udf("long")
     def walk(dags: pd.Series) -> pd.Series:
-        out = []
-        for dag in dags:
-            nodes: dict[int, list[int]] = {}
-            weights: dict[int, int] = {}
-            for r in dag:
-                # rt is an explicit row-type tag (0=stage, 1=task): a task
-                # row with a NULL duration (schema-legal; only the REST path
-                # filters them) must not be mistaken for a stage row.
-                if r["rt"] == 0:  # stage row
-                    nodes[int(r["stage_id"])] = (
-                        [] if r["parent_ids"] is None else [int(p) for p in r["parent_ids"]]
-                    )
-                elif r["d"] is not None:  # task row: running max = stage weight
-                    sid = int(r["stage_id"])
-                    d = int(r["d"])
-                    if d > weights.get(sid, -1):
-                        weights[sid] = d
-            memo: dict[int, int] = {}
-
-            def crit(sid: int) -> int:
-                # sparklens JobTimeSpan.criticalTime: missing stage -> (0, [])
-                if sid in memo:
-                    return memo[sid]
-                if sid in nodes:
-                    w, parents = weights.get(sid, 0), nodes[sid]
-                else:
-                    w, parents = 0, []
-                v = w + (max((crit(p) for p in parents), default=0) if parents else 0)
-                memo[sid] = v
-                return v
-
-            # A job with task rows but no stage rows (possible when tasks
-            # carry their own job_id) has an empty DAG: critical time 0
-            # rather than max() raising on an empty dict.
-            out.append(crit(max(nodes)) if nodes else 0)
-        return pd.Series(out)
+        # rt is an explicit row-type tag (0=stage, 1=task): a task row with
+        # a NULL duration (schema-legal; only the REST path filters them)
+        # must not be mistaken for a stage row.
+        return pd.Series(
+            [
+                job_critical_ms(
+                    ((r["stage_id"], r["parent_ids"]) for r in dag if r["rt"] == 0),
+                    ((r["stage_id"], r["d"]) for r in dag if r["rt"] != 0),
+                )
+                for dag in dags
+            ]
+        )
 
     stg = stages.select(
         F.lit(0).alias("rt"),

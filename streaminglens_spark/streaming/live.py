@@ -5,15 +5,17 @@ per-query daemon thread analyzes every progress event
 (``listener/QueryProgressListener.scala:34-89``,
 ``QueryInsightsManager.scala:140-192``).
 
-Engine wiring (Spark-first):
+Engine wiring:
 
 - ``ProgressCapture`` is a ``StreamingQueryListener`` (the public PySpark
   listener API) that captures each ``StreamingQueryProgress`` into rows
   matching the ``progress`` telemetry schema.
 - ``LiveAnalyzer.tick()`` -- called per trigger (e.g. from ``foreachBatch``)
-  or on a schedule -- turns captured progress into a DataFrame and runs the
-  SAME batch pipeline (A1 bounds -> A10 classification), honoring the
-  reference's control-plane semantics:
+  or on a schedule -- analyzes the captured rows on the driver, as the
+  reference does, with ``operators/rows.results_rows``: the batch
+  pipeline's per-batch steps (A1 bounds -> A10 classification), equal row
+  for row to ``results_table``, with no Spark job on the monitored app's
+  scheduler.  It honors the reference's control-plane semantics:
     * A2 min-batches gate + A3 analysis-interval gate,
     * A19 results ring buffer (``maxResultsRetention``),
     * A18 progress retention purge,
@@ -30,9 +32,10 @@ independent in the pipeline, so the incremental slice produces identical
 rows at per-tick cost bounded by new batches, not retention.
 
 Job/stage/task telemetry in live mode comes from the scheduler-listener
-bridge (``streaming/scheduler.py``) or any injected ``telemetry_provider``;
-without either, critical time degrades gracefully to the batch running time
-(no job spans to subtract).
+bridge (``streaming/scheduler.py``, read as rows) or any injected
+``telemetry_provider`` (its DataFrames collected to rows -- the one tick
+path that runs Spark jobs); without either, critical time degrades
+gracefully to the batch running time (no job spans to subtract).
 """
 
 from __future__ import annotations
@@ -46,6 +49,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import StreamingLensConfig
+from ..operators.rows import batch_running_ms, results_rows
+from .scheduler import (
+    JOBS_SCHEMA,
+    STAGES_SCHEMA,
+    TASKS_SCHEMA,
+    SchedulerTelemetryProvider,
+    scheduler_telemetry_provider,
+)
 
 try:  # the listener API needs the JVM bridge; guard for doc builds
     from pyspark.sql.streaming import StreamingQueryListener
@@ -188,8 +199,6 @@ class LiveAnalyzer:
         # every gauges() snapshot so registered sinks see them too
         self.extra_gauges: dict[str, dict[str, int]] = {}
         if telemetry_provider is None and scheduler_capture is not None:
-            from .scheduler import scheduler_telemetry_provider
-
             telemetry_provider = scheduler_telemetry_provider(spark, scheduler_capture)
         self.telemetry_provider = telemetry_provider
         self.reporters = reporters or []  # pre-instantiated, shared across queries
@@ -220,68 +229,62 @@ class LiveAnalyzer:
 
     def _analyze_once(self) -> list[dict] | None:
         """One gated analysis pass over the NEWLY GATED batches' progress
-        slice only; returns new results rows (dicts).  Incremental by
-        construction: per-batch results are independent downstream, so the
-        slice yields rows identical to a full re-analysis at a per-tick cost
-        bounded by new batches (not retained history)."""
-        from ..operators.pipeline import results_table
-        from ..telemetry import Telemetry
+        rows only; returns new results rows (dicts).  Per-batch results are
+        independent, so the slice yields the rows a full re-analysis would,
+        at a per-tick cost bounded by new batches (not retained history).
 
+        The analysis is ``rows.results_rows`` on the driver, which reads
+        only the jobs in the gated batches' ``[min, max]`` job-id ranges
+        and those jobs' stages and tasks.  Scheduler-backed and
+        progress-only ticks build no DataFrame and submit no Spark job; a
+        custom ``telemetry_provider``'s tables are collected to rows."""
         if not self.capture.snapshot():
             return None  # no-op: nothing captured yet
         gated = self._gated_rows()
         if not gated:
             return None  # no-op: every batch gated out
         self.last_tick_analyzed_rows = len(gated)
-        progress = self.spark.createDataFrame(gated, PROGRESS_SCHEMA)
 
-        telemetry = self.telemetry_provider(progress) if self.telemetry_provider else None
-        if telemetry is None:
-            # progress-only degradation: no job spans -> walltime 0, cp 0
-            # (single source of truth for the table schemas: scheduler.py)
-            from .scheduler import (
-                EXECUTORS_SCHEMA,
-                JOBS_SCHEMA,
-                STAGES_SCHEMA,
-                TASKS_SCHEMA,
-            )
-
-            telemetry = Telemetry(
-                progress=progress,
-                jobs=self.spark.createDataFrame([], JOBS_SCHEMA),
-                stages=self.spark.createDataFrame([], STAGES_SCHEMA),
-                tasks=self.spark.createDataFrame([], TASKS_SCHEMA),
-                executors=self.spark.createDataFrame([], EXECUTORS_SCHEMA),
-                sla_config=self.spark.createDataFrame(
-                    [], "query_key string, sla_ms bigint"
-                ),
-            )
+        provider = self.telemetry_provider
+        if isinstance(provider, SchedulerTelemetryProvider):
+            jobs, stages, tasks, _ = provider.capture.snapshot_rows()
+            sla_config: list = []
+        elif provider is not None:
+            jobs, stages, tasks, sla_config = self._provider_rows(gated)
         else:
-            # analyze the gated slice even if the provider carries its own
-            # (full) progress table -- incrementality lives here
-            telemetry = Telemetry(
-                progress=progress,
-                jobs=telemetry.jobs,
-                stages=telemetry.stages,
-                tasks=telemetry.tasks,
-                executors=telemetry.executors,
-                sla_config=telemetry.sla_config,
-            )
+            jobs = stages = tasks = sla_config = []  # progress-only
+        # runtime per-query overrides win over the provider's sla_config
+        # (same anti-join + append as batch-mode StreamingLens.derive)
+        sla_config = [r for r in sla_config if r[0] not in self.sla_overrides]
+        sla_config += self.sla_overrides.items()
+        return results_rows(
+            gated, jobs, stages, tasks, sla_config,
+            default_sla_ms=self.config.expected_micro_batch_sla_millis,
+        )
 
-        if self.sla_overrides:
-            # runtime per-query overrides win over the provider's sla_config
-            # (same anti-join + append as batch-mode StreamingLens.derive)
-            extra = self.spark.createDataFrame(
-                list(self.sla_overrides.items()), "query_key string, sla_ms bigint"
-            )
-            telemetry.sla_config = telemetry.sla_config.join(
-                extra.select("query_key"), "query_key", "left_anti"
-            ).unionByName(extra)
+    def _provider_rows(self, gated: list[tuple]) -> tuple[list, list, list, list]:
+        """Collect a custom provider's job/stage/task/sla tables to rows in
+        the capture's column order (the only tick path that runs Spark
+        jobs).  The provider gets the gated progress slice as a DataFrame;
+        None means progress-only."""
+        t = self.telemetry_provider(self.spark.createDataFrame(gated, PROGRESS_SCHEMA))
+        if t is None:
+            return [], [], [], []
+        tasks = t.tasks
+        if "job_id" not in tasks.columns:
+            # tasks without a job key: attribute via the stage->job index (S2)
+            tasks = tasks.join(t.stages.select("stage_id", "job_id"), "stage_id")
 
-        out = results_table(
-            telemetry, default_sla_ms=self.config.expected_micro_batch_sla_millis
-        ).collect()
-        return [row.asDict() for row in out]
+        def rows(df: DataFrame, schema: str) -> list[tuple]:
+            cols = [c.split()[0] for c in schema.split(",")]
+            return [tuple(r) for r in df.select(*cols).collect()]
+
+        return (
+            rows(t.jobs, JOBS_SCHEMA),
+            rows(t.stages, STAGES_SCHEMA),
+            rows(tasks, TASKS_SCHEMA),
+            rows(t.sla_config, "query_key string, sla_ms bigint"),
+        )
 
     # -- the per-trigger entry point ----------------------------------
     def tick(self) -> list[dict]:
@@ -397,8 +400,7 @@ class LiveAnalyzer:
                 latest[r[0]] = r
         err_rows = []
         for qid, r in latest.items():
-            nir, rps = r[5], r[6]
-            brt = int((nir / rps) * 1000) if (nir and rps) else 0
+            brt = batch_running_ms(r[4], r[5], r[6]) or 0
             err_rows.append(
                 {
                     "query_id": qid,

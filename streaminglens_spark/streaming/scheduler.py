@@ -12,8 +12,11 @@ pipeline already analyzes (``telemetry.Telemetry``).
 Scale note: like the reference, this is *control-plane* state on the driver
 -- it grows with scheduler events (jobs/stages/tasks of the monitored app),
 not with data volume.  ``purge_below`` keeps it bounded exactly like the
-reference's retention purge (A18).  The analysis itself stays distributed:
-captured rows become DataFrames and run the same partitioned pipeline.
+reference's retention purge (A18).  Like the reference, a live tick
+analyzes the captured rows on the driver (``operators/rows.py``), so the
+lens submits no Spark job of its own to the monitored app's scheduler; the
+same rows also convert to the telemetry DataFrames the batch pipeline
+analyzes (``SchedulerTelemetryProvider``).
 
 Event handlers are fail-open (S15): a capture error must never take down the
 listener bus (reference guards every handler the same way,
@@ -345,15 +348,24 @@ def detach_scheduler(spark: SparkSession, cap: SchedulerCapture) -> None:
         pass
 
 
-def scheduler_telemetry_provider(spark: SparkSession, cap: SchedulerCapture):
+class SchedulerTelemetryProvider:
     """A ``telemetry_provider`` for ``LiveAnalyzer``: progress comes from the
     StreamingQueryListener bridge, job/stage/task/executor tables from the
     scheduler capture -- making live critical-path analysis real with no
-    injected telemetry."""
-    from ..telemetry import Telemetry
+    injected telemetry.  Called with a progress DataFrame it returns the
+    capture's rows as telemetry DataFrames, the contract every provider
+    keeps; ``LiveAnalyzer`` recognizes it and reads ``capture`` directly,
+    so a scheduler-backed tick builds no DataFrame."""
 
-    def provide(progress: DataFrame) -> Telemetry:
-        jobs, stages, tasks, executors = cap.snapshot_rows()
+    def __init__(self, spark: SparkSession, capture: SchedulerCapture) -> None:
+        self.spark = spark
+        self.capture = capture
+
+    def __call__(self, progress: DataFrame):
+        from ..telemetry import Telemetry
+
+        spark = self.spark
+        jobs, stages, tasks, executors = self.capture.snapshot_rows()
         return Telemetry(
             progress=progress,
             jobs=spark.createDataFrame(jobs, JOBS_SCHEMA),
@@ -363,4 +375,5 @@ def scheduler_telemetry_provider(spark: SparkSession, cap: SchedulerCapture):
             sla_config=spark.createDataFrame([], "query_key string, sla_ms bigint"),
         )
 
-    return provide
+
+scheduler_telemetry_provider = SchedulerTelemetryProvider  # the public factory name
