@@ -52,7 +52,7 @@ from streaminglens_spark import registry  # noqa: E402
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    # fixture parquet uses TIMESTAMP(NANOS); read as BIGINT nanos
+    # generated inputs write events.ts as TIMESTAMP(NANOS); read it as BIGINT nanos
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

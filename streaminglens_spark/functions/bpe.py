@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BPE_MERGES = 8
+_MERGES_SCHEMA = "step long, left string, right string, merged string, pair_count long"
 
 
 def _word_table(documents: DataFrame) -> DataFrame:
@@ -119,9 +120,7 @@ def bpe_train(documents: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     spark = documents.sparkSession
     words = _word_table(documents).localCheckpoint()
     merges = _train_rounds(words, start_step=0, n_rounds=n_merges)
-    return spark.createDataFrame(
-        merges, "step long, left string, right string, merged string, pair_count long"
-    )
+    return spark.createDataFrame(merges, _MERGES_SCHEMA)
 
 
 def _apply_merge_round(words: DataFrame, a: str, b: str) -> DataFrame:
@@ -233,8 +232,11 @@ def bpe_extend(
     ``bpe_train(docs, k) + bpe_extend(docs, those merges, n)`` equals
     ``bpe_train(docs, k + n)`` row for row.
 
-    Returns only the NEW merges, steps numbered from ``len(merges)``."""
+    Returns only the NEW merges, steps numbered from ``len(merges)``;
+    ``n_more < 1`` returns none without building (or caching) the replay."""
     spark = documents.sparkSession
+    if n_more < 1:
+        return spark.createDataFrame([], _MERGES_SCHEMA)
     words = _word_table(documents).localCheckpoint()
     replay: list[DataFrame] = []
     for a, b in merges:
@@ -247,10 +249,7 @@ def bpe_extend(
     new_merges = _train_rounds(
         words, start_step=len(merges), n_rounds=n_more, stale=replay[:-1]
     )
-    return spark.createDataFrame(
-        new_merges,
-        "step long, left string, right string, merged string, pair_count long",
-    )
+    return spark.createDataFrame(new_merges, _MERGES_SCHEMA)
 
 
 def bpe_segment(documents: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:

@@ -352,19 +352,17 @@ def _admitted_and_split(
     from .dedup import leakage_safe_split
 
     corpus = split_corpus if split_corpus is not None else documents
+    # passing the session carries its tags into the leg threads too
+    inherit = inheritable_thread_target(documents.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         adm = pool.submit(
-            inheritable_thread_target(
+            inherit(
                 lambda: _ingest_admitted(
                     documents, sources, budgets, n_per_domain
                 )
             )
         )
-        spl = pool.submit(
-            inheritable_thread_target(
-                lambda: leakage_safe_split(corpus, val_frac)
-            )
-        )
+        spl = pool.submit(inherit(lambda: leakage_safe_split(corpus, val_frac)))
         return adm.result(), spl.result()
 
 

@@ -698,9 +698,13 @@ def dedup_clusters(
     sort, no collect.  Returns (doc_id, cluster_id, cluster_size) for every
     doc appearing in a pair; cluster_id is the smallest doc_id reachable
     (so the cluster's canonical keeper is ``doc_id == cluster_id``).
+    ``max_iters < 1`` raises ``ValueError``: the seeded first round is
+    itself a propagation round.
     """
     from ..cache import track
 
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     # materialize the edge set ONCE (r11): `sym` (and the hybrid path's
     # quotient) derive from it, and without the barrier the entire
     # upstream PAIR-FORMATION chain (minhash/simhash banding -- ~5 s at

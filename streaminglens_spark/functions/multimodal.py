@@ -796,9 +796,8 @@ def image_ahash(media: DataFrame) -> DataFrame:
 
     g = AHASH_GRID
 
-    # bit weights for the two 32-bit halves, built once per task
-    _w_lo = (1 << np.arange(32, dtype=np.int64))
-    _w_hi = (1 << np.arange(32, dtype=np.int64))
+    # bit weights of either 32-bit half, built once per task
+    _w = 1 << np.arange(32, dtype=np.int64)
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -830,8 +829,8 @@ def image_ahash(media: DataFrame) -> DataFrame:
                 ).ravel()  # row-major == the loop's r-outer/c-inner order
                 thresh = int(micro.sum()) // (g * g)
                 bits = micro > thresh
-                lo = int((_w_lo[bits[:32]]).sum())
-                hi = int((_w_hi[bits[32:]]).sum())
+                lo = int(_w[bits[:32]].sum())
+                hi = int(_w[bits[32:]].sum())
                 ids.append(int(doc_id))
                 ws.append(w)
                 hs.append(h)

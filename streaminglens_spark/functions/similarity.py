@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -219,6 +221,85 @@ def ivf_centroids(embeddings: DataFrame) -> DataFrame:
     )
 
 
+def _lloyd_kernel(k: int, iters: int):
+    """``applyInPandas`` kernel: the whole fit set (vec_id, v, nrm, q) ->
+    the (cell, cv, cnrm) centroid table after init plus ``iters`` Lloyd
+    iterations, with the Spark fold semantics of ``_fold_assign`` and
+    the quantized re-estimation:
+
+    - dot products are left folds over the dims (vectorized across
+      rows x cells), scores ``dot / (nrm * cnrm)``; a zero denominator
+      raises like Spark's ANSI division;
+    - the argmax is a strictly-greater fold over ascending cells with
+      Spark's ordering (NaN above every other value), so ties go to the
+      lower cell;
+    - each centroid is ``float(sum q) / 1e6 / count`` over its members'
+      BIGINT-quantized values (``q`` is computed by Spark: its
+      ``round`` is HALF_UP, numpy's is half-to-even); empty cells drop
+      out and the rest keep their ids.
+
+    Everything the kernel calls is local to it, so Spark ships it by
+    value: the Python workers need not import this package."""
+
+    def fold_norm(m: np.ndarray) -> np.ndarray:
+        # `_norm` per row: a left fold of x*x from 0.0, then sqrt (never a
+        # pairwise or BLAS sum, whose order changes the bits)
+        acc = np.zeros(m.shape[0])
+        for d in range(m.shape[1]):
+            acc = acc + m[:, d] * m[:, d]
+        return np.sqrt(acc)
+
+    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", kind="stable")
+        v = np.stack(pdf["v"].to_numpy())
+        nrm = pdf["nrm"].to_numpy()
+        kc = min(k, len(pdf))
+        cells = np.arange(kc)
+        cv, cnrm = v[:kc], nrm[:kc]
+        if iters:
+            q = np.stack(pdf["q"].to_numpy())
+        for _ in range(iters):
+            den = nrm[:, None] * cnrm[None, :]
+            if (den == 0).any():
+                raise ZeroDivisionError(
+                    "[DIVIDE_BY_ZERO] kmeans_fit: cosine score with a "
+                    "zero-norm vector or centroid"
+                )
+            dot = np.zeros(den.shape)
+            for d in range(v.shape[1]):
+                dot = dot + v[:, d, None] * cv[None, :, d]
+            s = dot / den
+            best = np.full(len(v), -1)
+            bs = np.full(len(v), -np.inf)
+            for j in range(len(cells)):
+                better = np.where(np.isnan(s[:, j]), ~np.isnan(bs), s[:, j] > bs)
+                best = np.where(better, j, best)
+                bs = np.where(better, s[:, j], bs)
+            used, pos, counts = np.unique(
+                best, return_inverse=True, return_counts=True
+            )
+            sums = np.zeros((len(used), q.shape[1]), dtype=np.int64)
+            np.add.at(sums, pos, q)
+            if np.abs(q.astype(np.float64)).max() * len(q) >= 2.0**63:
+                # int64 adds wrap modulo 2**64, so `sums` is exact iff the
+                # true sum fits BIGINT -- where Spark's ANSI sum raises
+                exact = np.zeros(sums.shape, dtype=object)
+                np.add.at(exact, pos, q.astype(object))
+                if ((exact < -(2**63)) | (exact >= 2**63)).any():
+                    raise ArithmeticError(
+                        "[ARITHMETIC_OVERFLOW] kmeans_fit: quantized "
+                        "centroid sum overflows BIGINT"
+                    )
+            cells = cells[used]
+            cv = sums.astype(np.float64) / 1_000_000.0 / counts[:, None]
+            cnrm = fold_norm(cv)
+        return pd.DataFrame(
+            {"cell": cells.astype(np.int32), "cv": list(cv), "cnrm": cnrm}
+        )
+
+    return fit
+
+
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
@@ -228,69 +309,40 @@ def kmeans_fit(
     """Deterministic Lloyd k-means for the IVF coarse quantizer -- the
     iterative-algorithm path when no natural cells (labels) exist.
 
-    Spark shape per iteration: centroids are a k x dim broadcast (tiny by
-    construction), assignment is a map-only pass over the corpus, and the
-    re-estimation is one ``groupBy(cell, dim)`` over integer-QUANTIZED
-    values (``round(x*1e6)`` summed as BIGINT, the ``ivf_centroids`` trick)
-    so every centroid is exact and order-independent -- the fit is
-    bit-reproducible across partitionings and re-runs.  Driver traffic is
-    k x dim doubles per iteration (the centroids themselves, which must be
-    broadcast anyway), never data rows.
+    Init: the k lowest vec_ids (deterministic; k-means++ would sample),
+    or every row when there are fewer than k.  Assignment metric:
+    cosine, matching ``ivf_topk``'s probe ranking; ties break toward the
+    lower cell id.  Re-estimation averages integer-QUANTIZED values
+    (``round(x*1e6)`` summed as BIGINT, the ``ivf_centroids`` trick), so
+    every centroid is exact and order-independent and the fit is
+    bit-reproducible across partitionings and re-runs.  Empty cells drop
+    out.  Returns (cell, cv, cnrm) -- drop-in for
+    ``ivf_topk(centroids=...)``.
 
-    Init: the k lowest vec_ids (deterministic; k-means++ would sample).
-    Assignment metric: cosine, matching ``ivf_topk``'s probe ranking.
-    Ties break toward the lower cell id.  Returns (cell, cv, cnrm) --
-    drop-in for ``ivf_topk(centroids=...)``.
+    Spark shape: Spark computes the per-row inputs (double vector, norm,
+    quantized vector) and sends the whole fit set to ONE Python worker
+    (a ``groupBy(lit(0)).applyInPandas`` kernel, ``_lloyd_kernel``),
+    which runs the init and all iterations in numpy with the same
+    sequential folds as ``_fold_assign`` -- two or three jobs per fit,
+    whatever ``iters`` is.  The build stays lazy: nothing runs before the
+    first action.
 
-    r6 plan fix: the per-iteration assignment is the ``ann_assign_fold``
-    argmax (a strictly-greater fold over the cell-ascending broadcast
-    centroid array) instead of a ``row_number`` window -- the window
-    shuffled n x k scored rows EVERY iteration just to keep rank 1; the
-    fold is a pure projection, leaving the per-dimension ``groupBy`` as
-    the iteration's only exchange.  Scores, tie-breaks, and therefore
-    centroids are bit-identical (the fold/window equality is pinned in
-    ``tests/test_streaming_stateless_ops.py``); the q_ann_topk /
-    q_semantic_dedup / q_shared_fit oracles are untouched.
-
-    r12 ``sample_fraction``: the sf10 probe measured the full-corpus
-    fit as the pipeline's first linear wall (~linear in vectors: 10x
-    embeddings -> 7.7x wall; PERF.md) -- the fit is STATISTICS, not
-    inventory, so at scale the Lloyd passes should run over a
-    deterministic hash-sample and only the final assignment should see
-    every vector.  When set, init and every iteration read only the
+    ``sample_fraction`` is the lever at scale, where the fit set must
+    fit one worker's memory: init and every iteration then read only the
     rows whose affine vec_id hash falls under the fraction
     (``hash_sample`` -- map-only, engine-independent, so the oracle
-    replays the exact sample), cutting the per-iteration argmax-fold
-    and re-estimation cost by ~1/fraction.  ``sample_fraction=1.0``
-    keeps every row and is bit-identical to the unsampled fit (the
-    hash filter at threshold P keeps the whole space -- pinned in
-    tests/test_sampled_fit.py).  The returned centroids remain a
-    drop-in for ``ivf_topk(centroids=...)`` consumers, which always
-    score the FULL corpus.
-
-    Sample-floor guard (r12 advice #2): a fraction whose hash-sample
-    yields fewer than ``k`` rows would silently initialize fewer
-    centroids (and an EMPTY sample would return an empty centroid
-    table, making downstream ``ann_topk``/``ivf_topk`` quietly return
-    nothing).  The sampled path therefore carries a lazy per-plan
-    ``raise_error`` guard -- a broadcast single-row count over the
-    first ``k`` sampled rows, the repo's ``mixture_sample`` idiom -- so
-    an undersized fitset fails LOUDLY at first action while query
-    BUILD still runs zero jobs (the laziness contract).  Out-of-range
-    fractions raise ``ValueError`` at build time.
-
-    Memory footprint (ADVICE r14): the fit input -- the full
-    (vec_id, double vec, norm) projection on the UNSAMPLED path -- is
-    ``track()``-persisted in MEMORY_AND_DISK for the life of the tracked
-    registry (roughly doubling the corpus's storage footprint at large
-    SF) and is freed only when the caller honors the
-    ``release_caches()`` contract; large-scale callers should pass
-    ``sample_fraction`` so the cached fitset is the sample, not the
-    corpus."""
-    from ..cache import track
-    from ..plans.shape import scan_parallel
+    replays the exact sample).  ``sample_fraction=1.0`` keeps every row
+    and is bit-identical to the unsampled fit.  The returned centroids
+    remain a drop-in for ``ivf_topk(centroids=...)`` consumers, which
+    always score the FULL corpus.  A fraction whose sample holds fewer
+    than ``k`` rows fails at first action (a lazy ``raise_error`` guard,
+    the ``mixture_sample`` idiom) instead of silently fitting fewer
+    cells; out-of-range fractions and ``k < 1`` raise ``ValueError`` at
+    build time."""
     from .sampling import hash_sample
 
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     if sample_fraction is not None and not 0.0 < sample_fraction <= 1.0:
         raise ValueError(
             f"sample_fraction must be in (0, 1], got {sample_fraction}"
@@ -332,57 +384,17 @@ def kmeans_fit(
             .filter(F.col("_fit_ok") == 1)
             .drop("_fit_ok")
         )
-    # the per-iteration argmax fold is k x dim multiply-adds per row --
-    # CPU-dense, so it must not run at (possibly single-split) scan
-    # parallelism; no-op on a real multi-split scan
-    # r14: track()-persist the fit input.  EVERY Lloyd iteration's
-    # re-estimation action re-read the embeddings parquet and re-ran the
-    # double-cast + norm projection (profiled at sf1: four identical
-    # ~1.8 s scan+exchange stages inside one q_shared_fit run -- one per
-    # iteration past the first); the cache scans it once and iterations
-    # 2..n read the in-memory blocks.  Lazy, so the zero-build-time-jobs
-    # contract holds; values unchanged (same plan below the cache).  The
-    # init's k-row orderBy reads the same cached frame instead of a
-    # fifth parquet scan.
-    body = track(scan_parallel(fit))
-    cents = (
-        body.orderBy("vec_id")
-        .limit(k)
-        .withColumn(
-            "cell", F.row_number().over(Window.orderBy("vec_id")) - 1
+    if iters > 0:
+        # Spark's HALF_UP round and ANSI cast (a NaN element raises here)
+        fit = fit.withColumn(
+            "q",
+            F.transform("v", lambda x: F.round(x * 1_000_000).cast("long")),
         )
-        .select(F.col("cell").cast("int"), F.col("v").alias("cv"))
-        .withColumn("cnrm", _norm(F.col("cv")))
+    # one group holds the whole fit set; the alias keeps Spark from reading
+    # a bare integer literal as a GROUP BY ordinal
+    return fit.groupBy(F.lit(0).alias("_fit")).applyInPandas(
+        _lloyd_kernel(k, iters), "cell int, cv array<double>, cnrm double"
     )
-    for _ in range(iters):
-        assign = _fold_assign(body, cents).select("cell", "vec_id", "v")
-        dims = assign.select(
-            "cell", F.posexplode(F.col("v")).alias("dim", "x")
-        ).withColumn("q", F.round(F.col("x") * 1_000_000).cast("long"))
-        cents = (
-            dims.groupBy("cell", "dim")
-            .agg((F.sum("q") / F.lit(1_000_000.0) / F.count(F.lit(1))).alias("c"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("p"))
-            .select("cell", F.transform("p", lambda s: s["c"]).alias("cv"))
-            .withColumn("cnrm", _norm(F.col("cv")))
-        )
-        # r14: tracked LAZY persist per iteration.  Without it, iteration
-        # i's logical plan nests every earlier iteration's full subtree:
-        # the final 5-iteration plan measured 205 KB / 206 Exchange nodes
-        # and q_shared_fit spent HALF its wall in the driver (21.1 s wall
-        # vs 11.4 s summed stages, no stage over 1.25 s) -- Catalyst +
-        # AQE re-planning the nested tree once per query stage.  Cache
-        # substitution replaces each iterate's subtree with a k-row
-        # InMemoryRelation in every consumer, so the optimizer/AQE only
-        # ever see ONE iteration's tree.  persist() is lazy (unlike
-        # localCheckpoint(eager=False), whose AQE stage materialization
-        # runs jobs at build), so the zero-build-time-jobs contract
-        # (tests/test_plans.py) holds; the centroid VALUES are
-        # bit-identical (same plan below the cache).
-        cents = track(cents)
-        # empty cells simply drop out (standard Lloyd behavior); k shrinks
-    return cents
 
 
 def ivf_topk(

@@ -33,8 +33,10 @@ def get_spark(app_name: str = "streaminglens-spark", master: str | None = None) 
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # fixture parquet uses TIMESTAMP(NANOS) which Spark has no native
-        # type for; read as BIGINT nanos and convert to millis ourselves
+        # the sf fixtures' events.ts is TIMESTAMP(MICROS) (read natively);
+        # generated inputs (perfbench, scripts/make_scale_data.py) write
+        # TIMESTAMP(NANOS), which Spark has no type for: read it as BIGINT
+        # nanos and convert to millis ourselves
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

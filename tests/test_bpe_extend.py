@@ -64,3 +64,15 @@ def test_extend_early_stops_when_nothing_trainable(spark):
     prefix = [(left, right) for _, left, right, _, _ in first]
     ext = bpe_extend(docs, prefix, n_more=4)
     assert ext.count() == 0  # nothing left with pair_count >= 2
+
+
+def test_zero_rounds_leave_no_cache_pins(spark):
+    """n_more=0 discovers nothing, so it must not leave the replayed
+    word-table generations tracked until release_caches()."""
+    from streaminglens_spark import cache
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    n_before = len(cache._PERSISTED)
+    ext = bpe_extend(docs, [("t", "h"), ("th", "e"), ("i", "n")], n_more=0)
+    assert _rows(ext) == []
+    assert len(cache._PERSISTED) == n_before

@@ -177,3 +177,15 @@ def test_hybrid_quotient_handoff_on_mixed_graph(spark):
     pure = _clusters(dedup_clusters(pairs, max_iters=40, switch_after=0))
     contract = _clusters(dedup_clusters_contract(pairs, max_iters=40))
     assert hybrid == pure == contract
+
+
+def test_dedup_clusters_rejects_max_iters_below_one(spark):
+    """The seeded first round is a propagation round, so a zero-round
+    budget cannot be honoured: it raises instead of running it."""
+    import pytest
+
+    pairs = _pairs(spark, [(1, 2), (2, 3)])
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iters"):
+            dedup_clusters(pairs, max_iters=bad)
+    assert dedup_clusters(pairs, max_iters=1).count() == 3
