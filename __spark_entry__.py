@@ -6,36 +6,15 @@ SURVEY.md §2 with their DuckDB oracles (see
 ``streaminglens_spark/registry.py``).
 
 THE 50-SLOT CONTRACT: the grading driver evaluates at most 50 correctness
-queries, in dict order (the round-1 run silently dropped the 51st), so
-``queries()`` exposes exactly the 50-entry ``registry.ORACLE`` surface --
-never the full registry.  The other 99 registered queries live on
+queries, in dict order (a 51st is dropped silently), so ``queries()``
+exposes exactly the 50 queries named in ``registry.DRIVER_SURFACE``, in
+that order -- never the full registry.  ``registry.py`` raises
+RuntimeError at import if that list is not 50 distinct queries, each with
+a function and an oracle.  The other registered queries live on
 ``registry.LOCAL_ORACLE`` and are hash-checked against their independent
-DuckDB oracles at sf0.001 AND sf0.01 on every test run
-(``tests/test_oracle_queries.py`` iterates ORACLE ∪ LOCAL_ORACLE).
-
-POST-DEBT ROTATION POLICY (since r10; r9 verdict ask #7): every registry
-query has held a green driver CORRECTNESS row at least once (debt reached
-zero in r9), so rotation now refreshes the STALEST evidence -- each
-round's surface is the 50 queries whose last green driver row is oldest
-(ascending last-green round, alphabetical within a round), with NEW or
-semantically-CHANGED queries taking priority slots.  The r14 surface
-(r13 verdict asks #1-2): ``q_lsh_advisor`` (r13-new, the only query
-never to hold a driver row, now carrying the fixed-budget
-``max_sample_rows`` cap) and ``q_job_advisor`` (r14-new, the composed
-recommendations table) in priority slots, then ALL 16 remaining
-r10-stale queries (``q_media_meta`` -- bumped by r13b -- plus
-``q_minhash_lsh``..``q_ts_parse``, re-proving the §2 core slots
-``q_state_buckets``, ``q_source_recos``, ``q_sla_resolve``,
-``q_ts_parse``, ``q_purge_set``, ``q_results_topk``,
-``q_stage_metrics`` the r13 verdict names), then the r11-stale batch
-alphabetically (32 of its 50 fit:
-``q_ann_topk``..``q_pii_redact``).  R15 refresh candidates under this
-policy: the remaining 18 r11-stale queries
-(``q_pmi``..``q_vocab_topk``), then the r12-stale batch.  A
-driver that
-ever evaluates more than 50 must read LOCAL_ORACLE too -- do NOT widen
-``queries()`` without removing the cap guard (``registry.py`` raises
-RuntimeError if len(ORACLE) != 50).
+DuckDB oracles at sf0.001 AND sf0.01 by ``tests/test_oracle_queries.py``,
+which iterates ``registry.ORACLES`` (both surfaces).  A driver that ever
+evaluates more than 50 must read LOCAL_ORACLE too.
 """
 
 from __future__ import annotations

@@ -43,9 +43,9 @@ LEGACY18 = [
     "q_discounted_state", # reporting aggregation (A13)
     "q_dedup_exact",      # exact dedup
     "q_minhash_lsh",      # MinHash+LSH near-dup
-    "q_simhash_pairs",    # SimHash byte-band near-dup (r3 driver rotation)
+    "q_simhash_pairs",    # SimHash byte-band near-dup
     "q_cosine_topk",      # similarity search
-    "q_ivf_topk",         # IVF ANN (r3 driver rotation)
+    "q_ivf_topk",         # IVF ANN
     "q_text_stats",       # text analysis
     "q_asof_join",        # as-of join (single-shuffle union-merge, r3)
     "q_range_join",       # bucketed interval join (r3)
@@ -56,101 +56,35 @@ LEGACY18 = [
     "q_frame_sample",     # multimodal mapInPandas
 ]
 
-# r5 heavyweights (verdict ask #4): the most expensive operators in the
-# repo get artifact-of-record timings, not PERF.md prose.
-HEAVY_R5 = [
-    "q_ann_topk",          # kmeans-IVF ANN + exact re-rank (slowest single query)
-    "q_ppl_filter",        # bigram-LM perplexity-band filter
-    "q_bigram_surprisal",  # bigram-LM surprisal scoring
-    "q_bm25_search",       # BM25 inverted-index search
-    "q_corpus_pipeline",   # fused 5-stage corpus cleanup
-]
-
-# r6: the fit-once quantizer pipeline (ann_topk + semantic_dedup sharing
-# ONE kmeans fit) -- its time vs q_ann_topk alone is the measured value
-# of amortizing the fit across consumers.
-HEAVY_R6 = [
-    "q_shared_fit",
-]
-
-# r7 (r6 verdict ask #5): the last two heavyweights whose timings lived
-# only in PERF.md prose join the artifact -- BPE training (iterative
-# driver-looped merge discovery; q_bpe_merges wraps bpe_train) and the
-# KLL quantile sketch (two-level applyInPandas build + merge; non-oracle
-# by design, parity-tested in tests/test_kll.py).
-HEAVY_R7 = [
-    "q_bpe_merges",
-    "q_kll_quantiles",
-]
-
-# r8: the queries this round's verdict asks touched get artifact-of-record
-# timings -- the six-stage pipeline with the span stage composed in (vs
-# q_corpus_pipeline, its five-stage prefix), the hash-sampled BPE trainer
-# (vs q_bpe_merges, the full-corpus trainer it takes off the critical
-# path), and the re-planned two-level token-budget sampler (regression
-# watch for the scale fix).
-HEAVY_R8 = [
-    "q_corpus_pipeline_v2",
-    "q_bpe_sampled",
-    "q_token_budget",
+# The benched heavyweights: each is the most expensive of its operator
+# family, or a flagship whose cost against its parts is the measured
+# value of composing them.
+HEADLINE = LEGACY18 + [
+    "q_ann_topk",             # kmeans-IVF ANN + exact re-rank
+    "q_ppl_filter",           # bigram-LM perplexity-band filter
+    "q_bigram_surprisal",     # bigram-LM surprisal scoring
+    "q_bm25_search",          # BM25 inverted-index search
+    "q_corpus_pipeline",      # fused 5-stage corpus cleanup
+    "q_shared_fit",           # one kmeans fit shared by ANN + semantic dedup
+    "q_bpe_merges",           # BPE training (driver-looped merge discovery)
+    "q_kll_quantiles",        # KLL sketch; non-oracle, parity-tested in test_kll
+    "q_corpus_pipeline_v2",   # six-stage cleanup (v1 + span removal)
+    "q_bpe_sampled",          # hash-sampled BPE trainer
+    "q_token_budget",         # two-level token-budget sampler
     "q_domain_cap",
     "q_quality_budget",
-]
-
-# r9 (r9 verdict ask #5): the perceptual-dedup family joins the artifact --
-# their plans changed in r9 (degenerate exclusion + bucket cap) and again
-# in r10 (the shared cap helper), and their only prior numbers were r8
-# PERF.md prose.  The repo rule: heavyweights get artifact-of-record
-# timings.
-HEAVY_R9 = [
-    "q_image_ahash",
+    "q_image_ahash",          # perceptual-dedup family
     "q_image_dups",
     "q_audio_fp",
     "q_audio_dups",
-]
-
-# r10: the end-to-end ingest flagship (cleanup -> domain cap -> quality
-# budgets -> packing -> manifest as one plan) -- the composition's cost
-# vs its stages' standalone slots is the measured value of the fused
-# plan + persisted-spine design.
-HEAVY_R10 = [
-    "q_ingest_e2e",
-]
-
-# r11: the loader-tail flagship (the e2e front + leakage split + epoch
-# order as one plan -- its cost vs q_ingest_e2e is the measured price of
-# the split/shuffle tail) and the new cross-document line dedup (a full
-# explode + two aggregations over every line in the corpus).
-HEAVY_R11 = [
-    "q_ingest_full",
-    "q_line_dedup",
-]
-
-# r12: the packed flagship (the full chain + epoch-order sequence
-# packing -- its cost vs q_ingest_full is the measured price of the
-# packing tail).
-HEAVY_R12 = [
-    "q_ingest_packed",
-]
-
-HEAVY_R13 = [
+    "q_ingest_e2e",           # ingest flagship: cleanup -> cap -> budgets -> packing
+    "q_ingest_full",          # + leakage split and epoch order
+    "q_line_dedup",           # cross-document line dedup
+    "q_ingest_packed",        # + epoch-order sequence packing
     "q_ingest_curriculum",
+    "q_lsh_advisor",          # capped LSH banding advisor
+    "q_job_advisor",          # four advisor families in one table
 ]
-
-# r14: the capped LSH banding advisor (plan changed: the fixed-budget
-# row-cap predicate + measured 5k default -- the sample binds at sf1+,
-# so the artifact records the DEFAULT diagnostic's true fixed cost) and
-# the composed job advisor (4 advisor families in one table; the pair
-# histogram dominates, the composition's adds are <=5-row aggregates).
-HEAVY_R14 = [
-    "q_lsh_advisor",
-    "q_job_advisor",
-]
-
-HEADLINE = (
-    LEGACY18 + HEAVY_R5 + HEAVY_R6 + HEAVY_R7 + HEAVY_R8 + HEAVY_R9
-    + HEAVY_R10 + HEAVY_R11 + HEAVY_R12 + HEAVY_R13 + HEAVY_R14
-)
 
 
 def run_suite(
@@ -419,7 +353,6 @@ def main() -> None:
     # and run a trivial pandas UDF so the Python worker pool (one proc per
     # core, spawned on first use) is charged to startup, not to whichever
     # query happens to hit Arrow first
-    # getattr, not queries(): the warmup must survive driver-surface rotation
     registry.q_batch_bounds(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()

@@ -25,21 +25,16 @@ def main() -> int:
     spark = get_spark("oracle-check")
     con = duckdb_connect(sf_dir)
     failures = 0
-    all_oracle = {**registry.ORACLE, **registry.LOCAL_ORACLE}
+    names = set(registry.ORACLES)
     if only is not None:
-        missing = only - set(all_oracle)
+        missing = only - names
         if missing:
             raise SystemExit(f"unknown queries: {sorted(missing)}")
-        all_oracle = {k: v for k, v in all_oracle.items() if k in only}
-    for name in sorted(all_oracle):
+        names = only
+    for name in sorted(names):
         t0 = time.time()
         df = getattr(registry, name)(spark, sf_dir)
-        sql = all_oracle[name]
-        if sql is None:
-            n = df.count()
-            print(f"{name:24s} rows-only  rows={n}  {time.time()-t0:.1f}s")
-            continue
-        res = compare(df, con, sql)
+        res = compare(df, con, registry.ORACLES[name])
         status = "OK" if res["ok"] else "FAIL"
         if not res["ok"]:
             failures += 1

@@ -6,22 +6,18 @@ from the job's MAX stage id, walk the stage DAG rootward; each stage
 contributes its max single-task duration; a stage's critical time is its own
 weight plus the max over its parents; missing parents contribute 0.
 
-``job_critical_ms`` is that walk for one job in plain Python; the default
-Spark mapping runs it in an Arrow-batched pandas UDF over each job's
-collected DAG, and the live tick calls it on the driver.  The ``joins``
-mapping is a bounded iterative loop of self-joins (DAG depth is small --
-single-digit for real Spark jobs), each iteration a hash join partitioned
-by stage_id; its loop length depends only on DAG *depth*, not job count.
+``job_critical_ms`` is that walk for one job in plain Python; the Spark
+mapping runs it in an Arrow-batched pandas UDF over each job's collected
+DAG, and the live tick calls it on the driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
-from functools import reduce
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -62,45 +58,15 @@ def job_critical_ms(stages: Iterable, task_durations: Iterable) -> int:
     return crit(max(nodes)) if nodes else 0
 
 
-def stage_weights(stages: DataFrame, tasks: DataFrame) -> DataFrame:
-    """Per-stage node weight = max single-task duration (sparklens
-    ``taskExecutionTimes.max``): with infinite executors a stage cannot
-    finish faster than its slowest task."""
-    w = tasks.groupBy("stage_id").agg(F.max("duration_ms").alias("w"))
-    return stages.select("job_id", "stage_id", "parent_ids").join(w, "stage_id", "left").select(
-        "job_id", "stage_id", "parent_ids", F.coalesce("w", F.lit(0)).cast("long").alias("w")
-    )
-
-
-def critical_path_per_job(
-    stages: DataFrame, tasks: DataFrame, impl: str = "pandas", max_depth: int = 64
-) -> DataFrame:
+def critical_path_per_job(stages: DataFrame, tasks: DataFrame) -> DataFrame:
     """A8 -- longest rootward path from the max stage id, per job.
 
-    Returns (job_id, critical_ms).
-
-    Two implementations, same semantics:
-
-    - ``pandas`` (default): one shuffle collecting each job's (tiny) stage
-      DAG into an array, then an Arrow-batched pandas UDF does a memoized
-      DAG walk -- thousands of jobs per Python batch, so per-job Python
-      overhead is amortized.  Scales with the *number* of jobs.
-    - ``joins``: a bounded loop of JVM-side self-joins (one per DAG depth
-      level).  No Python anywhere; use for adversarially deep/wide DAGs or
-      UDF-free deployments.
-    """
-    if impl == "pandas":
-        return _critical_path_pandas(stages, tasks)
-    return _critical_path_joins(stages, tasks, max_depth)
-
-
-def _critical_path_pandas(stages: DataFrame, tasks: DataFrame) -> DataFrame:
-    """Single-shuffle plan: stage rows and task rows are unioned keyed by
-    ``job_id`` and collected in ONE ``groupBy`` (the only exchange); the
-    Arrow-batched walk computes per-stage max task duration in Python while
-    it builds the DAG.  The r2 plan paid three exchanges
-    (tasks->stage_id agg, stages join, job_id collect) for the same result;
-    max-of-ints in Python is exact, so semantics are unchanged."""
+    Returns (job_id, critical_ms).  Single-shuffle plan: stage rows and
+    task rows are unioned keyed by ``job_id`` and collected in ONE
+    ``groupBy`` (the only exchange); an Arrow-batched pandas UDF then runs
+    ``job_critical_ms`` over each job's (tiny) DAG, computing the per-stage
+    max task duration while it builds the DAG -- thousands of jobs per
+    Python batch, so per-job Python overhead is amortized."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -143,59 +109,6 @@ def _critical_path_pandas(stages: DataFrame, tasks: DataFrame) -> DataFrame:
         F.collect_list(F.struct("rt", "stage_id", "parent_ids", "d")).alias("dag")
     )
     return dags.select("job_id", walk(F.col("dag")).alias("critical_ms"))
-
-
-def _critical_path_joins(stages: DataFrame, tasks: DataFrame, max_depth: int) -> DataFrame:
-    from ..cache import track
-
-    # tracked persist (released by the caller via cache.release_caches());
-    # the returned plan still reads it, so it cannot be unpersisted here
-    nodes = track(stage_weights(stages, tasks))
-    rn = Window.partitionBy("job_id").orderBy(F.col("stage_id").desc())
-    frontier = (
-        nodes.withColumn("_rn", F.row_number().over(rn))
-        .filter(F.col("_rn") == 1)
-        .select("job_id", "stage_id", "parent_ids", F.col("w").alias("cum"))
-        .persist()
-    )
-
-    terminals: list[DataFrame] = []
-    for _ in range(max_depth):
-        terminals.append(
-            frontier.filter(F.size("parent_ids") == 0).select("job_id", "cum")
-        )
-        expanded = (
-            frontier.filter(F.size("parent_ids") > 0)
-            .select("job_id", F.explode("parent_ids").alias("pid"), "cum")
-            .join(
-                # sparklens walks the *per-job* stageMap: key by (job_id, stage)
-                nodes.select(
-                    "job_id",
-                    F.col("stage_id").alias("pid"),
-                    F.col("parent_ids").alias("p_parents"),
-                    F.col("w").alias("pw"),
-                ),
-                on=["job_id", "pid"],
-                how="left",
-            )
-            .select(
-                "job_id",
-                F.col("pid").alias("stage_id"),
-                # missing parent stage: weight 0, no parents (sparklens getOrElse)
-                F.coalesce("p_parents", F.array().cast("array<bigint>")).alias("parent_ids"),
-                (F.col("cum") + F.coalesce("pw", F.lit(0))).alias("cum"),
-            )
-            .persist()
-        )
-        if expanded.isEmpty():
-            frontier.unpersist()
-            break
-        frontier.unpersist()
-        frontier = expanded
-
-    all_terminal = reduce(lambda a, b: a.unionByName(b), terminals)
-    out = all_terminal.groupBy("job_id").agg(F.max("cum").cast("long").alias("critical_ms"))
-    return out
 
 
 def critical_time(

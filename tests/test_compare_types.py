@@ -55,7 +55,7 @@ def test_pack_sequences_oracle_is_typed_clean(spark):
     con = duckdb_connect(SF_DIR_001)
     try:
         df = registry.q_pack_sequences(spark, SF_DIR_001)
-        sql = {**registry.ORACLE, **registry.LOCAL_ORACLE}["q_pack_sequences"]
+        sql = registry.ORACLES["q_pack_sequences"]
         res = compare(df, con, sql)
         assert res["ok"], {k: v for k, v in res.items() if k != "spark_cols"}
         assert res["types_match"], res.get("type_diff")

@@ -15,9 +15,6 @@ from tests.conftest import SF_DIR
 @pytest.fixture(scope="module")
 def dfs(spark):
     # getattr, not queries(): the set spans driver + LOCAL_ORACLE surfaces
-    # (q_job_walltime/q_results_topk rotated off the driver surface in the
-    # r5 final rotation; invariants hold regardless of which surface a
-    # query sits on)
     return {
         name: getattr(registry, name)(spark, SF_DIR).collect()
         for name in (

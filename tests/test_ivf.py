@@ -10,9 +10,9 @@ import pytest
 
 from streaminglens_spark.functions.similarity import ivf_topk
 from streaminglens_spark.oracle.compare import compare, duckdb_connect
-from streaminglens_spark.registry import LOCAL_ORACLE, ORACLE
+from streaminglens_spark.registry import ORACLES
 
-IVF_SQL = {**ORACLE, **LOCAL_ORACLE}["q_ivf_topk"]  # rotation-proof
+IVF_SQL = ORACLES["q_ivf_topk"]
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])

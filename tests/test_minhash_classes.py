@@ -16,11 +16,11 @@ import pandas as pd
 import pytest
 
 from streaminglens_spark.functions.dedup import minhash_lsh_pairs
-from streaminglens_spark.registry import LOCAL_ORACLE, ORACLE, _SHINGLES
+from streaminglens_spark.registry import ORACLES, _SHINGLES
 
 from .conftest import SF_DIR
 
-MINHASH_SQL = {**ORACLE, **LOCAL_ORACLE}["q_minhash_lsh"]  # rotation-proof
+MINHASH_SQL = ORACLES["q_minhash_lsh"]
 
 # the pre-r10 oracle formulation (corpus-level band join, exact-copy
 # shortcut AFTER the join): kept verbatim as the golden that proves the
@@ -178,11 +178,7 @@ def test_leakage_split_never_straddles_near_dup_pairs(spark, duck):
     the composed DuckDB oracle at the driver SF."""
     from streaminglens_spark.functions.dedup import leakage_safe_split
     from streaminglens_spark.oracle.compare import compare
-    from streaminglens_spark.registry import (
-        LOCAL_ORACLE,
-        ORACLE,
-        q_leakage_split,
-    )
+    from streaminglens_spark.registry import q_leakage_split
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = leakage_safe_split(docs).persist()
@@ -201,6 +197,5 @@ def test_leakage_split_never_straddles_near_dup_pairs(spark, duck):
         assert 0 < n_val < len(side)
     finally:
         out.unpersist()
-    sql = {**ORACLE, **LOCAL_ORACLE}["q_leakage_split"]
-    r = compare(q_leakage_split(spark, SF_DIR), duck, sql)
+    r = compare(q_leakage_split(spark, SF_DIR), duck, ORACLES["q_leakage_split"])
     assert r["ok"], {k: v for k, v in r.items() if "cols" not in k}

@@ -11,10 +11,8 @@ from streaminglens_spark import registry
 from streaminglens_spark.oracle.compare import compare, duckdb_connect
 from tests.conftest import SF_DIR, SF_DIR_001
 
-# driver surface + rotated-out queries (still first-class, locally
-# checked every run)
-ALL_ORACLE = {**registry.ORACLE, **registry.LOCAL_ORACLE}
-NAMES = sorted(ALL_ORACLE)
+# every oracle-paired query: the driver surface and LOCAL_ORACLE
+NAMES = sorted(registry.ORACLES)
 
 
 @pytest.fixture(scope="module")
@@ -27,11 +25,7 @@ def duck001():
 def _check(spark, con, name, sf_dir):
     fn = getattr(registry, name)
     df = fn(spark, sf_dir)
-    sql = ALL_ORACLE[name]
-    if sql is None:
-        assert df.count() >= 0  # rows-only check
-        return
-    res = compare(df, con, sql)
+    res = compare(df, con, registry.ORACLES[name])
     assert res["ok"], {k: v for k, v in res.items() if k != "spark_cols"}
 
 

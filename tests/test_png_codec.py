@@ -129,6 +129,6 @@ def test_q_decode_image_oracle_sf0001(spark, duck):
     res = compare(
         registry.q_decode_image(spark, SF_DIR),
         duck,
-        {**registry.ORACLE, **registry.LOCAL_ORACLE}["q_decode_image"],
+        registry.ORACLES["q_decode_image"],
     )
     assert res["ok"], res

@@ -85,7 +85,25 @@ def test_fold_is_arrival_order_independent(perm_seed, rows):
     assert _fold([batch_ids[i] for i in idx], [state_ids[i] for i in idx], 0.95) == base
 
 
-# -- A8: pandas and join-loop implementations agree on random DAGs --------
+# -- A8: the Spark plan agrees with brute-force path enumeration ---------
+
+def _brute_force_critical_ms(parents_of: dict, durations: dict) -> int:
+    """Longest of ALL rootward paths from the job's max stage id, each path
+    enumerated explicitly (no memo).  A stage weighs its max non-NULL task
+    duration (0 without one); a missing parent ends its path and adds 0."""
+    best = 0
+    stack = [(max(parents_of), 0)]
+    while stack:
+        sid, acc = stack.pop()
+        if sid not in parents_of:
+            best = max(best, acc)
+            continue
+        acc += max((d for d in durations.get(sid, []) if d is not None), default=0)
+        if not parents_of[sid]:
+            best = max(best, acc)
+        stack.extend((p, acc) for p in parents_of[sid])
+    return best
+
 
 def test_critical_path_impls_agree_on_random_dags(spark):
     from streaminglens_spark.operators.critical_path import critical_path_per_job
@@ -93,19 +111,28 @@ def test_critical_path_impls_agree_on_random_dags(spark):
 
     rng = random.Random(11)
     stage_rows, task_rows = [], []
-    sid = 0
+    expected = {}
+    sid = tid = 0
     for job in range(60):
         n = rng.randint(1, 7)
         ids = list(range(sid, sid + n))
         sid += n
+        parents_of, durations = {}, {}
         for i, s in enumerate(ids):
             # random parents among earlier stages of the job; occasionally a
             # dangling (missing) parent id, which sparklens treats as weight 0
             parents = [p for p in ids[:i] if rng.random() < 0.4]
             if i > 0 and rng.random() < 0.1:
                 parents.append(999_000 + s)  # missing stage
+            parents_of[s] = parents
             stage_rows.append((s, job, parents, 1, 0, 100))
-            task_rows.append((s * 10, s, job, "e0", 0, 0, rng.randint(1, 500), False))
+            # one to three tasks, some with a NULL duration (skipped)
+            for _ in range(rng.randint(1, 3)):
+                d = None if rng.random() < 0.15 else rng.randint(1, 500)
+                durations.setdefault(s, []).append(d)
+                task_rows.append((tid, s, job, "e0", 0, 0, d, False))
+                tid += 1
+        expected[job] = _brute_force_critical_ms(parents_of, durations)
 
     stages = spark.createDataFrame(
         stage_rows,
@@ -117,8 +144,6 @@ def test_critical_path_impls_agree_on_random_dags(spark):
         "task_id bigint, stage_id bigint, job_id bigint, executor_id string,"
         " launch_ms bigint, finish_ms bigint, duration_ms bigint, failed boolean",
     )
-    a = {r["job_id"]: r["critical_ms"]
-         for r in critical_path_per_job(stages, tasks, impl="pandas").collect()}
-    b = {r["job_id"]: r["critical_ms"]
-         for r in critical_path_per_job(stages, tasks, impl="joins").collect()}
-    assert a == b
+    got = {r["job_id"]: r["critical_ms"]
+           for r in critical_path_per_job(stages, tasks).collect()}
+    assert got == expected

@@ -9,9 +9,9 @@ import pytest
 
 from streaminglens_spark.functions.dedup import simhash_pairs
 from streaminglens_spark.oracle.compare import compare, duckdb_connect
-from streaminglens_spark.registry import LOCAL_ORACLE, ORACLE
+from streaminglens_spark.registry import ORACLES
 
-SIMHASH_PAIRS_SQL = {**ORACLE, **LOCAL_ORACLE}["q_simhash_pairs"]  # rotation-proof
+SIMHASH_PAIRS_SQL = ORACLES["q_simhash_pairs"]
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])

@@ -207,11 +207,7 @@ def test_degenerate_residual_clamps_not_negative(spark):
     from streaminglens_spark.functions.sampling import (
         _mixture_plan_from_counts,
     )
-    from streaminglens_spark.registry import (
-        LOCAL_ORACLE,
-        ORACLE,
-        TEMP_MIX_TOTAL,
-    )
+    from streaminglens_spark.registry import ORACLES, TEMP_MIX_TOTAL
 
     # six equal heavy strata each rounding UP past 1e6/6, one tiny
     # last-sorted stratum: raw residual = 1e6 - sum(others) < 0
@@ -246,8 +242,7 @@ def test_degenerate_residual_clamps_not_negative(spark):
     assert micros["z"] == 0  # the clamped last stratum
     assert {s: t for s, (_, t) in plan.items()} == targets
     # DuckDB oracle SQL on the same counts (counts CTE swapped for VALUES)
-    sql = (ORACLE.get("q_temperature_mix")
-           or LOCAL_ORACLE["q_temperature_mix"])
+    sql = ORACLES["q_temperature_mix"]
     tail = sql.split("wtd AS (", 1)[1]
     vals = ", ".join(
         f"('{s}', CAST({n} AS BIGINT))" for s, n in sorted(counts.items())
